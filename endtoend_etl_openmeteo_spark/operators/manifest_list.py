@@ -2,10 +2,10 @@
 versioned.py) — the Iceberg-style two-tier layout that keeps manifests
 usable at 100-TB file counts.
 
-Round-5 state: every snapshot's entry list lived inline in one vN.json —
-each commit re-serialized the FULL list (O(#files) write amplification on
-a 1-row append) and each scan deserialized it on the driver, pruning with
-Python loops. This module adds the second tier:
+With every entry inline in one vN.json, each commit re-serializes the
+FULL list (O(#files) write amplification on a 1-row append) and each scan
+deserializes it on the driver, pruning with Python loops. This module
+adds the second tier:
 
 - entries spill to immutable parquet MANIFEST FILES
   (``_manifests/m_<uuid>.parquet``, ~thousands of entries each), written
@@ -37,37 +37,21 @@ import base64
 import json
 import math
 import uuid
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_MANIFEST_DIR = "_manifests"
+from endtoend_etl_openmeteo_spark.operators.versioned import (
+    _MANIFEST_DIR,
+    _bloom_probe_kind,
+    _fs,
+    _local_path,
+)
 
 #: Entries per spilled manifest file. Small enough that a dirty rewrite
 #: touches a bounded slice, large enough that a 10^6-file table needs
 #: only ~250 refs in the manifest list.
 _CHUNK = 4096
-
-
-def _is_local(spark: SparkSession, table: str) -> bool:
-    """True only when the table genuinely lives on the driver-local
-    filesystem. A scheme-less path is NOT automatically local: with
-    ``fs.defaultFS=hdfs://...`` the data files and vN.json resolve to
-    HDFS, and a pyarrow write here would strand the manifest parquet on
-    the driver's local disk — referenced by the committed manifest list
-    but invisible to every Spark read (the same trap versioned.
-    _write_data and vt_count guard against, same rule applied)."""
-    scheme = urlparse(table).scheme
-    if scheme == "file":
-        return True
-    if scheme:
-        return False
-    return _hadoop(spark, table)[0].getScheme() == "file"
-
-
-def _local_root(table: str) -> str:
-    return table[len("file:"):] if table.startswith("file:") else table
 
 
 def _num_down(v: float) -> float:
@@ -253,7 +237,8 @@ def _write_manifest_file(
     spark: SparkSession, table: str, rel: str, entries: list[dict]
 ) -> None:
     rows = [_entry_row(e) for e in entries]
-    if _is_local(spark, table):
+    local_root = _local_path(spark, table)
+    if local_root is not None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -262,7 +247,7 @@ def _write_manifest_file(
             name: [r[name] for r in rows] for name in schema.names
         }
         tbl = pa.Table.from_pydict(cols, schema=schema)
-        pq.write_table(tbl, f"{_local_root(table)}/{rel}")
+        pq.write_table(tbl, f"{local_root}/{rel}")
     else:  # pragma: no cover - object-store fallback, exercised on clusters
         spark.createDataFrame(
             [
@@ -279,7 +264,7 @@ def _write_manifest_file(
             ENTRIES_DDL,
         ).coalesce(1).write.mode("overwrite").parquet(f"{table}/{rel}__dir")
         # single-file rename so the ref points at one immutable file
-        fs, jvm = _hadoop(spark, table)
+        fs, jvm = _fs(spark, table)
         src_dir = jvm.org.apache.hadoop.fs.Path(f"{table}/{rel}__dir")
         part = next(
             s.getPath()
@@ -290,15 +275,6 @@ def _write_manifest_file(
         fs.delete(src_dir, True)
 
 
-def _hadoop(spark: SparkSession, path: str):
-    # versioned._fs is the canonical filesystem resolver; imported lazily
-    # (versioned imports this module at call sites — a top-level import
-    # here would cycle)
-    from endtoend_etl_openmeteo_spark.operators.versioned import _fs
-
-    return _fs(spark, path)
-
-
 def load_ref_entries(
     spark: SparkSession, table: str, refs: list[dict]
 ) -> list[dict]:
@@ -307,12 +283,13 @@ def load_ref_entries(
     should prefer :func:`prune_entries_spark`."""
     table = table.rstrip("/")
     out: list[dict] = []
-    if _is_local(spark, table):
+    local_root = _local_path(spark, table)
+    if local_root is not None:
         import pyarrow.parquet as pq
 
         for r in refs:
             col = pq.read_table(
-                f"{_local_root(table)}/{r['ref']}", columns=["entry"]
+                f"{local_root}/{r['ref']}", columns=["entry"]
             ).column("entry")
             out.extend(json.loads(s) for s in col.to_pylist())
     else:  # pragma: no cover - object-store fallback
@@ -371,10 +348,6 @@ def _bloom_prune_sql(prune_eq: tuple[str, object]) -> str:
     Catalyst: NULL sidecar or kind mismatch -> keep; else keep iff every
     seeded probe bit is set. The hash is the writer's own
     xxhash64(canonical value, seed) — same expression, same engine."""
-    from endtoend_etl_openmeteo_spark.operators.versioned import (
-        _bloom_probe_kind,
-    )
-
     col, value = prune_eq
     kind = _bloom_probe_kind(value)
     key = _sql_str(col)

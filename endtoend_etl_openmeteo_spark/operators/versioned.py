@@ -46,6 +46,22 @@ def _fs(spark: SparkSession, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
+def _local_path(spark: SparkSession, table: str) -> str | None:
+    """The driver-local path of ``table``, or None when the table does not
+    live on the local filesystem. A scheme-less path is local only when
+    the resolved Hadoop filesystem is: with ``fs.defaultFS=hdfs://...``
+    the files live REMOTELY, and a pyarrow open of the same string would
+    read (or write) the driver's local disk instead."""
+    from urllib.parse import urlparse
+
+    scheme = urlparse(table).scheme
+    if scheme == "file":
+        return table[len("file:"):]
+    if scheme == "" and _fs(spark, table)[0].getScheme() == "file":
+        return table
+    return None
+
+
 def _write_file(spark: SparkSession, path: str, payload: bytes) -> None:
     fs, jvm = _fs(spark, path)
     out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
@@ -95,7 +111,7 @@ def _list_versions(spark: SparkSession, table: str) -> list[int]:
 
 
 #: Inline-vs-spilled threshold: snapshots with at most this many entries
-#: keep the round-5 single-JSON layout (small tables stay human-readable
+#: keep every entry inline in the vN.json (small tables stay human-readable
 #: and zero-extra-I/O); beyond it entries live in parquet manifest files
 #: and the JSON holds only the manifest LIST (refs + summaries) — see
 #: operators/manifest_list.py. Tests shrink this to exercise both tiers.
@@ -281,10 +297,6 @@ def _write_data(
     footer read per new file — the Iceberg commit-time pattern; no
     second scan of the batch); elsewhere a per-file aggregate scan is
     the fallback. Values must be JSON-stable (numbers / strings)."""
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
     table = table.rstrip("/")
     subdir = f"{_DATA_DIR}/{uuid.uuid4().hex[:12]}"
     df.write.mode("overwrite").parquet(f"{table}/{subdir}")
@@ -307,16 +319,10 @@ def _write_data(
     }
     stats_by_file: dict[str, dict] = {}
     rows_by_file: dict[str, int] = {}
-    scheme = urlparse(table).scheme
-    # A scheme-less path is local only when the resolved Hadoop filesystem
-    # is — with fs.defaultFS=hdfs://... the data was just written REMOTELY
-    # and a pyarrow open of the same string would read the driver's local
-    # disk (FileNotFoundError after the write already landed).
-    is_local = scheme == "file" or (scheme == "" and fs.getScheme() == "file")
-    if is_local:
+    local_root = _local_path(spark, table)
+    if local_root is not None:
         import pyarrow.parquet as pq
 
-        local_root = table[len("file:"):] if scheme == "file" else table
         for n in names:
             md = pq.ParquetFile(f"{local_root}/{subdir}/{n}").metadata
             rows_by_file[n] = md.num_rows
@@ -382,22 +388,26 @@ def _write_data(
     return entries
 
 
-def _total_bytes(spark: SparkSession, table: str, entries: list[dict]) -> int:
+def _total_bytes(entries: list[dict]) -> int:
     """Σ data-file sizes for a snapshot — from the per-entry ``bytes``
-    recorded at commit time (manifest-only); entries written before size
-    tracking fall back to one getFileStatus RPC each, once ever (the
-    next rewrite stamps them)."""
-    total = sum(e["bytes"] for e in entries if "bytes" in e)
-    legacy = [e["path"] for e in entries if "bytes" not in e]
-    if legacy:
-        fs, jvm = _fs(spark, table)
-        total += sum(
-            fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{table}/{p}")
-            ).getLen()
-            for p in legacy
-        )
-    return int(total)
+    :func:`_write_data` records at commit time (manifest-only)."""
+    return int(sum(e["bytes"] for e in entries))
+
+
+def _carried_cols(
+    entries: list[dict], stats_cols=None, bloom_cols=None
+) -> tuple[list[str] | None, list[str] | None]:
+    """(stats_cols, bloom_cols) for files written over a snapshot's
+    ``entries``: the requested columns plus every stats and bloom column
+    the entries recorded. A writer that dropped them would silently
+    degrade later pruning to keep-all on the files it writes — bloom
+    sidecars in particular must be rebuilt for the new file boundaries."""
+    stats = {c for e in entries for c in e.get("stats", {})}
+    bloom = {c for e in entries for c in e.get("bloom", {})}
+    return (
+        sorted(stats | set(stats_cols or ())) or None,
+        sorted(bloom | set(bloom_cols or ())) or None,
+    )
 
 
 def _footer_stats(path: str, stats_cols: list[str]) -> dict:
@@ -450,8 +460,8 @@ def _json_stat(v):
 
 #: Bloom sidecar geometry bounds. m is sized PER FILE from the observed
 #: distinct-key estimate (~10 bits/key, rounded up to a power of two) so
-#: production-sized files don't saturate: the old fixed m=2048 hit ~0.70
-#: fill (fp≈17%/file) at ~500 keys/file and degraded toward keep-all.
+#: production-sized files don't saturate: a fixed m=2048 reaches ~0.70
+#: fill (fp≈17%/file) at ~500 keys/file and degrades toward keep-all.
 #: Geometry is per-entry metadata, so mixed-geometry manifests are fine.
 #: _BLOOM_M_MAX is also the working modulus of the single distributed
 #: pass: positions are computed mod 2^16 and folded down to the chosen
@@ -665,7 +675,8 @@ def _upcastable(narrow, wide) -> bool:
 
 def _snapshot_schema(manifest: dict):
     """The StructType a snapshot's manifest recorded, or None for
-    manifests written before schema tracking."""
+    :func:`vt_init`'s empty v0 (every commit that adds files records
+    one)."""
     from pyspark.sql.types import StructType
 
     sj = manifest.get("schema")
@@ -676,8 +687,6 @@ def _align(df: DataFrame, schema) -> DataFrame:
     """Project ``df`` to ``schema``'s column set/order, adding typed NULLs
     for columns the frame lacks (the write-side half of additive
     evolution)."""
-    from pyspark.sql import functions as F
-
     have = set(df.columns)
     return df.select(
         *[
@@ -759,9 +768,7 @@ def _mapping_sig(e: dict, schema) -> tuple | None:
     """The physical→logical projection signature an entry needs, or None
     for the by-name fast path (physical names equal the snapshot schema's
     prefix — true for every file not written over by a rename)."""
-    cols = e.get("cols")
-    if cols is None or schema is None:
-        return None
+    cols = e["cols"]
     names = [f.name for f in schema.fields]
     if list(cols) == names[: len(cols)]:
         return None
@@ -782,7 +789,7 @@ def _scan_group(
     from pyspark.sql.types import StructField, StructType
 
     if sig is None:
-        reader = spark.read.schema(schema) if schema is not None else spark.read
+        reader = spark.read.schema(schema)
         project = None
     else:
         head = schema.fields[: len(sig)]
@@ -1010,16 +1017,46 @@ def vt_read(
     df = _entries_df(spark, table, entries, schema)
     if df is not None:
         return df
-    if schema is not None:
-        return spark.createDataFrame([], schema)
-    n_files = manifest.get("n_files", len(manifest.get("files", [])))
-    if n_files:
-        # pruned to nothing on a schema-less legacy table: resolve the
-        # full entry list once just to recover the file schema
-        full_entries = read_manifest(spark, table, v)["files"]
-        full = _entries_df(spark, table, full_entries, None)
-        return full.limit(0)
-    raise ValueError(f"version {v} of {table} is empty — nothing to scan")
+    if schema is None:
+        raise ValueError(f"version {v} of {table} is empty — nothing to scan")
+    return spark.createDataFrame([], schema)
+
+
+def _rewrite(
+    spark: SparkSession,
+    table: str,
+    op: str,
+    cluster,
+    target_mb: int,
+    n_files: int | None = None,
+    sort_cols: list[str] | None = None,
+) -> tuple[int, int, int]:
+    """The full-snapshot rewrite behind :func:`vt_compact` and
+    :func:`vt_optimize`: scan the current version (position deletes
+    applied), lay it out as ``cluster(df, n)`` with ``n`` =
+    ``n_files`` or ceil(bytes/target), rewrite with the recorded
+    stats/bloom columns (plus ``sort_cols``) and commit as ``op``.
+    Returns (new_version, files_before, files_after)."""
+    import math
+
+    table = table.rstrip("/")
+    parent = latest_version(spark, table)
+    manifest = read_manifest(spark, table, parent)
+    entries = manifest["files"]
+    if not entries:
+        return parent, 0, 0
+    n = n_files or max(
+        1, math.ceil(_total_bytes(entries) / (target_mb * 1024 * 1024))
+    )
+    df = _entries_df(spark, table, entries, _snapshot_schema(manifest))
+    stats_cols, bloom_cols = _carried_cols(entries, sort_cols)
+    files = _write_data(
+        spark, cluster(df, n), table, stats_cols=stats_cols, bloom_cols=bloom_cols
+    )
+    new_v = _commit(
+        spark, table, files, op, parent, extra={"schema": manifest["schema"]}
+    )
+    return new_v, len(entries), len(files)
 
 
 def vt_compact(
@@ -1037,32 +1074,31 @@ def vt_compact(
 
     Returns (new_version, files_before, files_after).
     """
-    import math
-
-    table = table.rstrip("/")
-    parent = latest_version(spark, table)
-    manifest = read_manifest(spark, table, parent)
-    if not manifest["files"]:
-        return parent, 0, 0
-    total = _total_bytes(spark, table, manifest["files"])
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    schema = _snapshot_schema(manifest)
-    df = _entries_df(spark, table, manifest["files"], schema)
-    # carry forward whichever stats/bloom columns the parent recorded —
-    # compaction rewrites files, so sidecars must be rebuilt for the new
-    # file boundaries or point-lookup pruning silently degrades to keep-all
-    stats_cols = sorted({c for e in manifest["files"] for c in e.get("stats", {})})
-    bloom_cols = sorted({c for e in manifest["files"] for c in e.get("bloom", {})})
-    files = _write_data(
-        spark,
-        df.repartition(n),
-        table,
-        stats_cols=stats_cols or None,
-        bloom_cols=bloom_cols or None,
+    return _rewrite(
+        spark, table, "compact", lambda df, n: df.repartition(n), target_mb
     )
-    extra = {"schema": manifest["schema"]} if "schema" in manifest else None
-    new_v = _commit(spark, table, files, "compact", parent, extra=extra)
-    return new_v, len(manifest["files"]), len(files)
+
+
+def _key_bounds(df: DataFrame, k0: str, op: str, what: str) -> tuple:
+    """(lo, hi, n) of ``df``'s leading key — the batch's merge scope —
+    from one aggregate. Raises on NULL keys: NULL never equals NULL, so a
+    keyed last-write-wins upsert is undefined for NULL-key rows, and
+    since min/max skip NULLs an all-NULL batch would otherwise look
+    empty and be silently DROPPED."""
+    b = df.agg(
+        F.min(k0).alias("lo"),
+        F.max(k0).alias("hi"),
+        F.count("*").alias("n"),
+        F.count(k0).alias("nk"),
+    ).collect()[0]
+    if b["n"] != b["nk"]:
+        raise ValueError(
+            f"{op}: {b['n'] - b['nk']} {what} rows have NULL merge key "
+            f"{k0!r} — filter them or assign surrogate keys upstream (a "
+            "NULL key can never match an existing row and would be "
+            "silently collapsed by last-write-wins)"
+        )
+    return b["lo"], b["hi"], b["n"]
 
 
 def vt_merge(
@@ -1081,37 +1117,25 @@ def vt_merge(
     partition scope, plus atomic visibility and history.
 
     Files without recorded stats are conservatively treated as touched
-    (correctness first). ``stats_cols`` defaults to ``[keys[0]]`` so every
-    merge leaves the stats the NEXT merge needs to prune.
+    (correctness first). The rewritten files record ``stats_cols``
+    (default ``[keys[0]]``) plus every stats/bloom column the parent
+    recorded, so every merge leaves the stats the NEXT merge needs to
+    prune.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     from endtoend_etl_openmeteo_spark.operators.merge import (
         dedup_last_write_wins,
     )
-
-    from pyspark.sql.types import StructType
 
     table = table.rstrip("/")
     k0 = keys[0]
     parent = latest_version(spark, table)
     manifest = read_manifest(spark, table, parent)
     entries = manifest["files"]
-    # carry forward whichever stats/bloom columns the parent recorded
-    # (vt_compact's rule): the rewrite is happening anyway, and dropping
-    # them would silently degrade later pruning to keep-all on every
-    # file this merge touches
-    stats_cols = stats_cols or sorted(
-        {c for e in entries for c in e.get("stats", {})} | {k0}
-    )
-    rewrite_bloom = sorted({c for e in entries for c in e.get("bloom", {})})
+    stats_cols, bloom_cols = _carried_cols(entries, stats_cols or [k0])
     # additive evolution during merge: the batch may carry NEW columns
-    parent_schema_json = manifest.get("schema")
-    if parent_schema_json is None and entries:
-        parent_schema_json = (
-            spark.read.parquet(f"{table}/{entries[0]['path']}").schema.json()
-        )
-    schema_json = _merge_schema(parent_schema_json, new.schema)
+    schema_json = _merge_schema(manifest.get("schema"), new.schema)
     merged_schema = StructType.fromJson(json.loads(schema_json))
 
     # The batch lineage is evaluated twice (bounds aggregate, then the
@@ -1123,39 +1147,11 @@ def vt_merge(
 
     new = new.localCheckpoint(eager=False)
     try:
-        bounds = new.agg(
-            F.min(k0).alias("lo"),
-            F.max(k0).alias("hi"),
-            F.count("*").alias("n"),
-            F.count(k0).alias("nk"),
-        ).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        if bounds["n"] != bounds["nk"]:
-            # NULL never equals NULL, so a keyed last-write-wins upsert is
-            # undefined for NULL-key rows — and `lo is None` would silently
-            # classify an all-NULL batch as empty and DROP it. Fail loudly.
-            raise ValueError(
-                f"vt_merge: {bounds['n'] - bounds['nk']} batch rows have NULL "
-                f"merge key {k0!r} — filter them or assign surrogate keys "
-                "upstream (NULL keys can never match and would be silently "
-                "collapsed by last-write-wins)"
-            )
+        lo, hi, _ = _key_bounds(new, k0, "vt_merge", "batch")
         # carry-forward of untouched entries is _commit's job (carry_from +
-        # dirty_paths); only the touched list matters here
-        touched = []
-        for e in entries:
-            mm = e.get("stats", {}).get(k0)
-            if not (
-                lo is None  # empty batch: nothing can touch
-                or (
-                    mm is not None
-                    and mm[0] is not None
-                    and mm[1] is not None
-                    and (mm[0] > hi or mm[1] < lo)
-                )
-            ):
-                touched.append(e)
-
+        # dirty_paths); only the touched list matters here. An empty
+        # batch (lo is None) touches nothing.
+        touched = _prune_entries(entries, (k0, lo, hi)) if lo is not None else []
         if touched:
             affected = _entries_df(spark, table, touched, merged_schema)
             merged = dedup_last_write_wins(
@@ -1167,13 +1163,9 @@ def vt_merge(
             )
         new_files = (
             _write_data(
-                spark,
-                merged,
-                table,
-                stats_cols=stats_cols,
-                bloom_cols=rewrite_bloom or None,
+                spark, merged, table, stats_cols=stats_cols, bloom_cols=bloom_cols
             )
-            if lo is not None or touched
+            if lo is not None
             else []
         )
         return _commit(
@@ -1326,48 +1318,18 @@ def vt_count(spark: SparkSession, table: str, version: int | None = None) -> int
 
     This is the Iceberg snapshot-summary trick: counting a 100-TB table
     costs one manifest read, no data or delete-file read at all.
-    Entries written before row tracking (no ``"rows"``) fall back to ONE
-    bounded Spark metadata count over just those files; delete-bearing
-    entries from before ``delete_rows`` fall back to footer totals of
-    their delete files (exact unless a partial rewrite split a shared
-    delete file's scope — rebuild via vt_compact to refresh)."""
+    Entries without ``"rows"`` (:func:`_write_data` on a non-local
+    filesystem with no ``stats_cols``) fall back to ONE bounded Spark
+    metadata count over just those files."""
     table = table.rstrip("/")
     v = latest_version(spark, table) if version is None else version
     entries = read_manifest(spark, table, v)["files"]
     total = sum(e["rows"] for e in entries if "rows" in e)
-    legacy = [e["path"] for e in entries if "rows" not in e]
-    if legacy:
+    uncounted = [e["path"] for e in entries if "rows" not in e]
+    if uncounted:
         # parquet metadata count — Spark answers from footers, no row scan
-        total += spark.read.parquet(*[f"{table}/{p}" for p in legacy]).count()
-    total -= sum(e["delete_rows"] for e in entries if "delete_rows" in e)
-    del_paths = sorted(
-        {
-            p
-            for e in entries
-            if "delete_rows" not in e
-            for p in e.get("deletes", [])
-        }
-    )
-    if del_paths:
-        from urllib.parse import urlparse
-
-        scheme = urlparse(table).scheme
-        # scheme-less paths are local only if the resolved Hadoop fs is
-        # (same rule as _write_data — pyarrow would read the driver disk)
-        if scheme == "file" or (
-            scheme == "" and _fs(spark, table)[0].getScheme() == "file"
-        ):
-            import pyarrow.parquet as pq
-
-            local_root = table[len("file:"):] if scheme == "file" else table
-            total -= sum(
-                pq.ParquetFile(f"{local_root}/{p}").metadata.num_rows
-                for p in del_paths
-            )
-        else:
-            total -= spark.read.parquet(
-                *[f"{table}/{p}" for p in del_paths]
-            ).count()
+        total += spark.read.parquet(*[f"{table}/{p}" for p in uncounted]).count()
+    total -= sum(e.get("delete_rows", 0) for e in entries)
     return int(total)
 
 
@@ -1390,14 +1352,11 @@ def vt_rename_column(spark: SparkSession, table: str, old: str, new: str) -> int
     After the rename the OLD name no longer exists: a later append
     carrying it creates a fresh column of that name (exactly Iceberg's
     semantics). Old snapshots time-travel with their own schema — the
-    rename is part of history, not a retroactive edit. Entries from
-    manifests that predate column tracking are stamped with their
-    physical names here (one driver-side footer read per legacy file,
-    once ever).
+    rename is part of history, not a retroactive edit.
 
     Manifest cost is INCREMENTAL on a spilled table: only entries whose
     recorded metadata actually changes (stats/bloom re-keyed under the
-    renamed column, or a legacy ``cols`` stamp) mark their refs dirty;
+    renamed column) mark their refs dirty;
     refs untouched by the re-keying carry verbatim through the same
     carry_from machinery every other commit uses — renaming a column no
     entry recorded stats for is an O(1) manifest-list edit, not a
@@ -1408,16 +1367,11 @@ def vt_rename_column(spark: SparkSession, table: str, old: str, new: str) -> int
     parent = latest_version(spark, table)
     manifest = read_manifest(spark, table, parent, resolve=False)
     entries = read_manifest(spark, table, parent)["files"]
-    schema_json = manifest.get("schema")
-    if schema_json is None and entries:
-        schema_json = (
-            spark.read.parquet(f"{table}/{entries[0]['path']}").schema.json()
-        )
-    if schema_json is None:
+    schema = _snapshot_schema(manifest)
+    if schema is None:
         raise ValueError(
             f"{table} is empty with no tracked schema — nothing to rename"
         )
-    schema = StructType.fromJson(json.loads(schema_json))
     names = [f.name for f in schema.fields]
     if old not in names:
         raise ValueError(f"no column {old!r} in {table} (columns: {names})")
@@ -1434,20 +1388,13 @@ def vt_rename_column(spark: SparkSession, table: str, old: str, new: str) -> int
     changed = []
     for e in entries:
         e2 = dict(e)
-        touched = False
-        if "cols" not in e2:
-            e2["cols"] = list(
-                spark.read.parquet(f"{table}/{e['path']}").schema.names
-            )
-            touched = True
         for k in ("stats", "bloom"):
             side = e2.get(k)
             if side and old in side:
                 side = dict(side)
                 side[new] = side.pop(old)
                 e2[k] = side
-                touched = True
-        if touched:
+        if e2 != e:
             changed.append(e2)
     return _commit(
         spark,
@@ -1584,8 +1531,6 @@ def _write_delete_files(
     data files, and subtracting its footer total would double-subtract
     rows whose data file a later merge already rewrote deletes-applied.
     Shared by the MOR merge and MOR delete writers."""
-    from pyspark.sql import functions as F
-
     subdir = f"deletes/{uuid.uuid4().hex[:12]}"
     matches.repartition(1).write.parquet(f"{table}/{subdir}")
     fs, jvm = _fs(spark, table)
@@ -1608,33 +1553,31 @@ def _write_delete_files(
     return del_paths, per_file, sum(per_file.values())
 
 
-def _entry_delete_rows(spark, table: str, e: dict) -> int:
-    """The entry's current delete-row count. Normally the recorded
-    ``delete_rows`` counter; an entry carrying deletes from BEFORE the
-    counter existed backfills it exactly with one bounded read of its
-    KB-sized delete files filtered to this entry's path — so an upgraded
-    entry never records a partial counter (which vt_count would subtract
-    INSTEAD of the footer fallback, losing the legacy share)."""
-    if "delete_rows" in e:
-        return int(e["delete_rows"])
-    if not e.get("deletes"):
-        return 0
-    return (
-        spark.read.parquet(*[f"{table}/{p}" for p in e["deletes"]])
-        .filter(F.col("__file") == e["path"])
-        .count()
-    )
+def _attach_deletes(
+    entries: list[dict], del_paths: list[str], per_file: dict
+) -> list[dict]:
+    """The entries hit by a new position-delete file, each with
+    ``del_paths`` appended to its ``deletes`` and its ``delete_rows``
+    counter advanced by its own match count — the per-entry exact count
+    that lets :func:`vt_count` subtract only THIS file's delete rows even
+    when the delete file is shared."""
+    return [
+        {
+            **e,
+            "deletes": list(e.get("deletes", [])) + del_paths,
+            "delete_rows": int(e.get("delete_rows", 0)) + per_file[e["path"]],
+        }
+        for e in entries
+        if e["path"] in per_file
+    ]
 
 
 def _live_rows_or_none(entries: list[dict]) -> int | None:
     """Σ live rows (rows − delete_rows) over ``entries`` from manifest
-    metadata alone, or None when any entry predates row tracking (the
+    metadata alone, or None when some entry has no recorded ``rows`` (the
     caller must then probe with a scan)."""
-    if any(
-        "rows" not in e or (e.get("deletes") and "delete_rows" not in e)
-        for e in entries
-    ):
-        return None  # legacy entry (no row tracking / uncounted deletes)
+    if any("rows" not in e for e in entries):
+        return None
     return sum(
         int(e["rows"]) - int(e.get("delete_rows", 0)) for e in entries
     )
@@ -1664,8 +1607,6 @@ def vt_delete(
     form a 100-TB table needs — delete cost ∝ files containing matches,
     plus snapshot isolation for free.
     """
-    from pyspark.sql import functions as F
-
     table = table.rstrip("/")
     parent = latest_version(spark, table)
     manifest = read_manifest(spark, table, parent)
@@ -1690,28 +1631,19 @@ def vt_delete(
     rows_deleted = sum(r["__n"] for r in per_file)
     touched = [e for e in entries if e["path"] in hit]
     kept = _entries_df(spark, table, touched, schema).filter(~pred)
-    stats_cols = stats_cols or sorted(
-        {c for e in touched for c in e.get("stats", {})}
-    )
-    # rewritten files must keep their bloom sidecars too (vt_compact's
-    # rule) or point lookups on them degrade to keep-all until a compact
-    rewrite_bloom = sorted({c for e in touched for c in e.get("bloom", {})})
+    stats_cols, bloom_cols = _carried_cols(entries, stats_cols)
     # "did the delete empty every touched file?" is manifest arithmetic,
     # not a scan: the counting pass above ran against LIVE rows (existing
     # position deletes applied), so kept is empty iff the matches equal
-    # the touched entries' live row counts. Entries predating row
-    # tracking fall back to the isEmpty probe job.
+    # the touched entries' live row counts. Entries without recorded
+    # rows fall back to the isEmpty probe job.
     live = _live_rows_or_none(touched)
     kept_empty = (
         rows_deleted == live if live is not None else kept.isEmpty()
     )
     new_files = (
         _write_data(
-            spark,
-            kept,
-            table,
-            stats_cols=stats_cols or None,
-            bloom_cols=rewrite_bloom or None,
+            spark, kept, table, stats_cols=stats_cols, bloom_cols=bloom_cols
         )
         if not kept_empty
         else []
@@ -1722,7 +1654,7 @@ def vt_delete(
         new_files,
         "delete",
         parent,
-        extra={"schema": manifest["schema"]} if "schema" in manifest else None,
+        extra={"schema": manifest["schema"]},
         carry_from=manifest,
         dirty_paths=hit,
     )
@@ -1759,8 +1691,6 @@ def vt_delete_mor(
     Returns (version, files_touched, rows_deleted); no commit when
     nothing matches.
     """
-    from pyspark.sql import functions as F
-
     table = table.rstrip("/")
     parent = latest_version(spark, table)
     manifest = read_manifest(spark, table, parent)
@@ -1777,29 +1707,17 @@ def vt_delete_mor(
     del_paths, per_file, rows_deleted = _write_delete_files(spark, table, matches)
     if not del_paths:
         return parent, 0, 0  # nothing matched: no commit
-    hit = set(per_file)
-    modified = []
-    for e in entries:
-        if e["path"] in hit:
-            e2 = dict(e)
-            e2["deletes"] = list(e.get("deletes", [])) + del_paths
-            # per-entry exact count: lets vt_count subtract only THIS
-            # file's delete rows even when the delete file is shared
-            e2["delete_rows"] = (
-                _entry_delete_rows(spark, table, e) + per_file[e["path"]]
-            )
-            modified.append(e2)
     version = _commit(
         spark,
         table,
-        modified,
+        _attach_deletes(entries, del_paths, per_file),
         "delete-mor",
         parent,
-        extra={"schema": manifest["schema"]} if "schema" in manifest else None,
+        extra={"schema": manifest["schema"]},
         carry_from=manifest,
-        dirty_paths=hit,
+        dirty_paths=set(per_file),
     )
-    return version, len(hit), rows_deleted
+    return version, len(per_file), rows_deleted
 
 
 def vt_diff(
@@ -1825,8 +1743,6 @@ def vt_diff(
     keys unique; appends of duplicate keys would fan out the full outer
     join).
     """
-    from pyspark.sql import functions as F
-
     table = table.rstrip("/")
     m_from = read_manifest(spark, table, v_from)
     m_to = read_manifest(spark, table, v_to)
@@ -1848,11 +1764,7 @@ def vt_diff(
     # shows up as `update` rows — column addition alone (all-null) diffs
     # empty, matching additive-evolution CDC semantics
     schema = _snapshot_schema(m_to) or _snapshot_schema(m_from)
-    if schema is not None:
-        empty = spark.createDataFrame([], schema)
-    else:
-        schema_entries = m_to["files"] or m_from["files"]
-        empty = _entries_df(spark, table, schema_entries, None).limit(0)
+    empty = spark.createDataFrame([], schema)
     old = _entries_df(spark, table, removed, schema)
     old = empty if old is None else old
     new = _entries_df(spark, table, added, schema)
@@ -1946,7 +1858,6 @@ def vt_apply_cdc(
     state makes it row-identical to ``v_to`` — the round-trip
     q_cdc_apply hash-checks.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     from endtoend_etl_openmeteo_spark.operators.merge import (
@@ -1955,13 +1866,9 @@ def vt_apply_cdc(
 
     table = table.rstrip("/")
     k0 = keys[0]
-    stats_cols = stats_cols or [k0]
     parent = latest_version(spark, table)
     manifest = read_manifest(spark, table, parent)
     entries = manifest["files"]
-    schema = _snapshot_schema(manifest)
-    if schema is None and entries:
-        schema = spark.read.parquet(f"{table}/{entries[0]['path']}").schema
     # The feed is typically an EXPENSIVE lineage (vt_diff's full outer
     # join); it is consumed three times below (bounds agg, delete
     # broadcast, upsert write). Lazy checkpoint: the bounds aggregate is
@@ -1979,42 +1886,17 @@ def vt_apply_cdc(
         [f for f in changes.schema.fields if f.name != "change_type"]
     )
     schema = StructType.fromJson(
-        json.loads(
-            _merge_schema(schema.json() if schema is not None else None, feed_schema)
-        )
+        json.loads(_merge_schema(manifest.get("schema"), feed_schema))
     )
 
     try:
-        bounds = changes.agg(
-            F.min(k0).alias("lo"),
-            F.max(k0).alias("hi"),
-            F.count("*").alias("n"),
-            F.count(k0).alias("nk"),
-        ).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        if bounds["n"] == 0:
+        # a NULL-key delete could never match its target (plain-equality
+        # anti join): the row would silently survive and break the
+        # apply(diff) round-trip identity — _key_bounds fails loudly
+        lo, hi, n = _key_bounds(changes, k0, "vt_apply_cdc", "feed")
+        if n == 0:
             return parent  # empty feed: nothing to apply
-        if bounds["n"] != bounds["nk"]:
-            # vt_merge's contract, enforced here too: a NULL-key delete can
-            # never match its target (plain-equality anti join), so the row
-            # silently survives and the documented apply(diff) round-trip
-            # identity breaks; an all-NULL-key feed would also classify
-            # every file as touched — a full-table rewrite. Fail loudly.
-            raise ValueError(
-                f"vt_apply_cdc: {bounds['n'] - bounds['nk']} feed rows have "
-                f"NULL key {k0!r} — filter them or assign surrogate keys "
-                "upstream (NULL keys can never match an existing row)"
-            )
-        touched = []
-        for e in entries:
-            mm = e.get("stats", {}).get(k0)
-            if not (
-                mm is not None
-                and mm[0] is not None
-                and mm[1] is not None
-                and (mm[0] > hi or mm[1] < lo)
-            ):
-                touched.append(e)
+        touched = _prune_entries(entries, (k0, lo, hi))
 
         upserts = _align(
             changes.filter(F.col("change_type").isin("insert", "update")), schema
@@ -2032,17 +1914,9 @@ def vt_apply_cdc(
             ).drop("__prio")
         else:
             merged = dedup_last_write_wins(upserts, keys, "__prio").drop("__prio")
-        # carry the parent's recorded stats/bloom columns through the rewrite
-        stats_cols = sorted(
-            set(stats_cols) | {c for e in touched for c in e.get("stats", {})}
-        )
-        rewrite_bloom = sorted({c for e in touched for c in e.get("bloom", {})})
+        stats_cols, bloom_cols = _carried_cols(entries, stats_cols or [k0])
         new_files = _write_data(
-            spark,
-            merged,
-            table,
-            stats_cols=stats_cols,
-            bloom_cols=rewrite_bloom or None,
+            spark, merged, table, stats_cols=stats_cols, bloom_cols=bloom_cols
         )
         return _commit(
             spark,
@@ -2087,8 +1961,11 @@ def vt_merge_mor(
     a batch row supersedes an existing row only when its order is >= the
     existing one (batch wins ties), and a batch row older than the
     table's copy is dropped without trace. ``order_col=None`` skips
-    ordering — the batch unconditionally replaces matching keys. Returns
-    (version, files_touched, rows_superseded).
+    ordering — the batch unconditionally replaces matching keys. The new
+    files record ``stats_cols`` (default ``[keys[0]]``) and
+    ``bloom_cols`` plus every stats/bloom column the parent recorded
+    (vt_merge parity again). Returns (version, files_touched,
+    rows_superseded).
     """
     from pyspark.sql.types import StructType
 
@@ -2101,12 +1978,8 @@ def vt_merge_mor(
     parent = latest_version(spark, table)
     manifest = read_manifest(spark, table, parent)
     entries = manifest["files"]
-    parent_schema_json = manifest.get("schema")
-    if parent_schema_json is None and entries:
-        parent_schema_json = (
-            spark.read.parquet(f"{table}/{entries[0]['path']}").schema.json()
-        )
-    schema_json = _merge_schema(parent_schema_json, new.schema)
+    stats_cols, bloom_cols = _carried_cols(entries, stats_cols or [k0], bloom_cols)
+    schema_json = _merge_schema(manifest.get("schema"), new.schema)
     merged_schema = StructType.fromJson(json.loads(schema_json))
     if order_col is not None:
         new = dedup_last_write_wins(new, keys, order_col)
@@ -2124,36 +1997,12 @@ def vt_merge_mor(
     new = new.localCheckpoint(eager=False)
     joined_ck: DataFrame | None = None
     try:
-        bounds = new.agg(
-            F.min(k0).alias("lo"),
-            F.max(k0).alias("hi"),
-            F.count("*").alias("n"),
-            F.count(k0).alias("nk"),
-        ).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        if bounds["n"] != bounds["nk"]:
-            # same contract as vt_merge: an all-NULL-key batch would
-            # otherwise be classified as empty and silently dropped
-            raise ValueError(
-                f"vt_merge_mor: {bounds['n'] - bounds['nk']} batch rows have "
-                f"NULL merge key {k0!r} — filter them or assign surrogate "
-                "keys upstream (NULL keys can never match)"
-            )
+        lo, hi, _ = _key_bounds(new, k0, "vt_merge_mor", "batch")
         if lo is None:
             return parent, 0, 0  # empty batch: nothing to commit
-
         # discovery scope: stats-pruned candidates only (conservative on
         # missing stats, same rule as vt_merge)
-        candidates = [
-            e
-            for e in entries
-            if not (
-                (mm := e.get("stats", {}).get(k0)) is not None
-                and mm[0] is not None
-                and mm[1] is not None
-                and (mm[0] > hi or mm[1] < lo)
-            )
-        ]
+        candidates = _prune_entries(entries, (k0, lo, hi))
         superseded = None
         to_insert = new
         if candidates:
@@ -2202,7 +2051,6 @@ def vt_merge_mor(
             del_paths, per_file, rows_superseded = _write_delete_files(
                 spark, table, superseded
             )
-        hit = set(per_file)
 
         new_files = (
             []
@@ -2211,33 +2059,23 @@ def vt_merge_mor(
                 spark,
                 _align(to_insert, merged_schema),
                 table,
-                stats_cols=stats_cols or [k0],
+                stats_cols=stats_cols,
                 bloom_cols=bloom_cols,
             )
         )
-        if not new_files and not hit:
+        if not new_files and not per_file:
             return parent, 0, 0  # fully-stale batch: nothing to commit
-        modified = []
-        for e in entries:
-            if e["path"] in hit:
-                e2 = dict(e)
-                e2["deletes"] = list(e.get("deletes", [])) + del_paths
-                # vt_count's exact per-entry subtraction (see vt_delete_mor)
-                e2["delete_rows"] = (
-                    _entry_delete_rows(spark, table, e) + per_file[e["path"]]
-                )
-                modified.append(e2)
         version = _commit(
             spark,
             table,
-            modified + new_files,
+            _attach_deletes(entries, del_paths, per_file) + new_files,
             "merge-mor",
             parent,
             extra={"schema": schema_json, **(extra_meta or {})},
             carry_from=manifest,
-            dirty_paths=hit,
+            dirty_paths=set(per_file),
         )
-        return version, len(hit), rows_superseded
+        return version, len(per_file), rows_superseded
     finally:
         release_checkpoint(new)
         if joined_ck is not None:
@@ -2270,37 +2108,21 @@ def vt_optimize(
     keeps every dimension's per-file min/max tight, so predicates on any
     of the columns prune — OPTIMIZE ZORDER BY for the manifest format.
     Returns (version, files_before, files_after)."""
-    import math
 
-    table = table.rstrip("/")
-    parent = latest_version(spark, table)
-    manifest = read_manifest(spark, table, parent)
-    if not manifest["files"]:
-        return parent, 0, 0
-    total = _total_bytes(spark, table, manifest["files"])
-    n = n_files or max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    schema = _snapshot_schema(manifest)
-    df = _entries_df(spark, table, manifest["files"], schema)
-    stats_cols = sorted(
-        {c for e in manifest["files"] for c in e.get("stats", {})} | set(sort_cols)
-    )
-    bloom_cols = sorted({c for e in manifest["files"] for c in e.get("bloom", {})})
-    if strategy == "zorder":
-        from endtoend_etl_openmeteo_spark.operators.layout import zorder_layout
+    def cluster(df: DataFrame, n: int) -> DataFrame:
+        if strategy == "zorder":
+            from endtoend_etl_openmeteo_spark.operators.layout import zorder_layout
 
-        clustered = zorder_layout(df, sort_cols, n)
-    elif strategy == "range":
-        clustered = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
+            return zorder_layout(df, sort_cols, n)
+        if strategy == "range":
+            return df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
+                *sort_cols
+            )
         raise ValueError(f"unknown optimize strategy {strategy!r}")
-    files = _write_data(
-        spark, clustered, table, stats_cols=stats_cols, bloom_cols=bloom_cols or None
+
+    return _rewrite(
+        spark, table, "optimize", cluster, target_mb, n_files, sort_cols
     )
-    extra = {"schema": manifest["schema"]} if "schema" in manifest else None
-    new_v = _commit(spark, table, files, "optimize", parent, extra=extra)
-    return new_v, len(manifest["files"]), len(files)
 
 
 def vt_merge_mor_epoch(
@@ -2400,7 +2222,7 @@ def vt_maintain(
     needs_rewrite = False
     if entries:
         has_deletes = any(e.get("deletes") for e in entries)
-        total = _total_bytes(spark, table, entries)
+        total = _total_bytes(entries)
         fragmented = (
             len(entries) > max_files
             and total / len(entries) < small_file_mb * 1024 * 1024

@@ -83,18 +83,27 @@ def run_elt(
             (F.col("timestamp") >= F.lit(start)) & (F.col("timestamp") < F.lit(end))
         )
 
+    return _merge_and_refresh(spark, hourly, silver_path, gold_path)
+
+
+def _merge_and_refresh(
+    spark: SparkSession, batch: DataFrame, silver_path: str, gold_path: str | None
+) -> DataFrame:
+    """Merge ``batch`` into silver (last-write-wins on (city, timestamp),
+    T4), then refresh the gold mart for the cities it touched. Returns the
+    gold mart: the stored one when ``gold_path`` is set, else computed
+    from silver."""
     merge_upsert(
         spark,
-        hourly,
+        batch,
         silver_path,
         keys=["city", "timestamp"],
         order_col="_ingested_at",
         partition_cols=["city"],
     )
-
     silver = spark.read.parquet(silver_path)
     if gold_path is not None:
-        refresh_gold_incremental(spark, hourly, silver, gold_path)
+        refresh_gold_incremental(spark, batch, silver, gold_path)
         return spark.read.parquet(gold_path)
     return fct_city_day(silver)
 
@@ -129,9 +138,6 @@ def backfill_missing(
     Returns the refreshed gold mart. Idempotent: re-running after a full
     backfill finds no gaps and changes nothing.
     """
-    from endtoend_etl_openmeteo_spark.operators.explode import (
-        flatten_validation_records,
-    )
     from endtoend_etl_openmeteo_spark.operators.gaps import (
         chunk_hours,
         find_missing_hours,
@@ -157,20 +163,7 @@ def backfill_missing(
         raw = payloads_to_df(spark, payloads)
         write_bronze(raw, bronze_path)  # archive; processing uses `raw` directly
         dq_gate(flatten_validation_records(raw), REFERENCE_WEATHER_SUITE)
-        batch_hourly = unzip_hourly(raw)
-        merge_upsert(
-            spark,
-            batch_hourly,
-            silver_path,
-            keys=["city", "timestamp"],
-            order_col="_ingested_at",
-            partition_cols=["city"],
-        )
-        silver = spark.read.parquet(silver_path)
-        if gold_path is not None:
-            refresh_gold_incremental(spark, batch_hourly, silver, gold_path)
-            return spark.read.parquet(gold_path)
-        return fct_city_day(silver)
+        return _merge_and_refresh(spark, unzip_hourly(raw), silver_path, gold_path)
     if gold_path is not None:
         return spark.read.parquet(gold_path)
     return fct_city_day(silver)

@@ -878,6 +878,40 @@ def test_mor_merge_within_batch_lww_and_empty_batch(spark, table):
     assert (v2, touched, superseded) == (v, 0, 0)  # no commit for nothing
 
 
+def test_mor_merge_carries_recorded_stats_and_bloom(spark, table):
+    """The files a MOR merge writes record every stats/bloom column the
+    parent recorded (vt_merge's rule): otherwise a bloom point lookup on
+    an absent value keeps every file the merge wrote."""
+    from endtoend_etl_openmeteo_spark.operators.versioned import (
+        vt_files,
+        vt_merge_mor,
+    )
+
+    vt_append(
+        spark,
+        _df(spark, 0, 100).repartition(2),
+        table,
+        stats_cols=["id", "v"],
+        bloom_cols=["v"],
+    )
+    base = {
+        e["path"]
+        for e in read_manifest(spark, table, latest_version(spark, table))["files"]
+    }
+    batch = spark.createDataFrame([(3, 5), (500, 1000)], "id long, v long")
+    v, _, superseded = vt_merge_mor(
+        spark, batch.repartition(2), table, keys=["id"]
+    )
+    assert superseded == 1
+    added = [
+        e for e in read_manifest(spark, table, v)["files"] if e["path"] not in base
+    ]
+    assert added
+    assert all(set(e["stats"]) == {"id", "v"} for e in added)
+    assert all("v" in e.get("bloom", {}) for e in added)
+    assert vt_files(spark, table, prune_eq=("v", 7777)) == []
+
+
 def test_optimize_makes_range_pruning_selective(spark, table):
     from endtoend_etl_openmeteo_spark.operators.versioned import (
         vt_files,
@@ -1287,28 +1321,6 @@ def test_rename_diff_is_empty_and_errors_are_clear(spark, table):
         vt_rename_column(spark, table, "id", "doubled")
 
 
-def test_rename_stamps_legacy_entries(spark, table):
-    import json
-
-    from endtoend_etl_openmeteo_spark.operators.versioned import (
-        _manifest_path,
-        vt_rename_column,
-    )
-
-    vt_append(spark, _df(spark, 0, 25), table)
-    v = latest_version(spark, table)
-    mpath = Path(_manifest_path(table, v))
-    manifest = json.loads(mpath.read_text())
-    for e in manifest["files"]:  # simulate a pre-column-tracking manifest
-        e.pop("cols", None)
-    mpath.write_text(json.dumps(manifest))
-    (mpath.parent / f".{mpath.name}.crc").unlink(missing_ok=True)
-    vt_rename_column(spark, table, "v", "doubled")
-    got = vt_read(spark, table)
-    assert got.columns == ["id", "doubled"]
-    assert got.count() == 25
-
-
 def test_bloom_kind_mismatch_never_skips(spark, table):
     """An int probe against a string-indexed column (and vice versa)
     hashes incompatibly — pruning must keep every file, not skip on
@@ -1608,6 +1620,8 @@ def test_merge_raises_on_null_merge_keys(spark, table):
     )
     with pytest.raises(ValueError, match="NULL merge key"):
         vt_merge(spark, mixed, table, keys=["id"], order_col="ts")
+    with pytest.raises(ValueError, match="NULL merge key"):
+        vt_merge_mor(spark, mixed, table, keys=["id"], order_col="ts")
 
 
 def test_apply_cdc_carries_evolved_columns(spark, table):
@@ -1831,8 +1845,7 @@ def test_rename_carries_untouched_manifest_refs(spark, table):
 
 def test_entries_record_bytes_and_size_totals_use_them(spark, table):
     """_write_data records per-file sizes at commit time so maintenance
-    byte totals are manifest-only; legacy entries (no 'bytes') fall back
-    to getFileStatus."""
+    byte totals are manifest-only."""
     from endtoend_etl_openmeteo_spark.operators.versioned import (
         _total_bytes,
     )
@@ -1843,7 +1856,4 @@ def test_entries_record_bytes_and_size_totals_use_them(spark, table):
     want = sum(
         p.stat().st_size for p in Path(table).glob("data/*/*.parquet")
     )
-    assert _total_bytes(spark, table, entries) == want
-    # legacy fallback: strip the field, totals still exact
-    stripped = [{k: v for k, v in e.items() if k != "bytes"} for e in entries]
-    assert _total_bytes(spark, table, stripped) == want
+    assert _total_bytes(entries) == want
